@@ -70,23 +70,23 @@ def _batch_ngram_buckets(texts: list[str], n: int, dim: int) -> tuple[np.ndarray
     return doc_of[:m][valid], acc[valid] % dim
 
 
-_DOC_CHUNK = 2048  # bounds the (chunk × dim) dense matrix to ~32 MB
+# predict_batch scores this many docs at a time, so a worker's scoring
+# working set is one (256 × LANGID_DIM) float64 block (4 MB) plus its int64
+# bincount, whatever the Arrow batch's row count.
+_DOC_CHUNK = 256
 
 
 def doc_matrix(texts: list[str], dim: int = LANGID_DIM) -> np.ndarray:
     """(N, dim) L2-normalized hashed-trigram matrix — the batch-vectorized
-    twin of ``doc_vector`` (identical rows; empty docs stay zero)."""
+    twin of ``doc_vector`` (identical rows; empty docs stay zero). Dense:
+    callers pass at most ``_DOC_CHUNK`` scoring docs or the training corpus."""
     N = len(texts)
-    M = np.zeros((N, dim), dtype=np.float64)
-    for lo in range(0, N, _DOC_CHUNK):
-        chunk = texts[lo : lo + _DOC_CHUNK]
-        docs, buckets = _batch_ngram_buckets(chunk, 3, dim)
-        if docs.size:
-            flat = np.bincount(docs * dim + buckets, minlength=len(chunk) * dim)
-            M[lo : lo + len(chunk)] = flat.reshape(len(chunk), dim)
+    docs, buckets = _batch_ngram_buckets(texts, 3, dim)
+    M = np.bincount(docs * dim + buckets, minlength=N * dim).reshape(N, dim).astype(np.float64)
     norms = np.linalg.norm(M, axis=1)
     norms[norms == 0] = 1.0
-    return M / norms[:, None]
+    M /= norms[:, None]
+    return M
 
 
 def doc_vector(text: str) -> np.ndarray:
@@ -104,16 +104,21 @@ class LangIdModel:
 
     def predict_batch(self, texts: list[str]) -> tuple[list[str], np.ndarray]:
         """Batch argmax-cosine prediction. Returns (labels, margins) where
-        margin = best − second-best cosine (confidence proxy)."""
-        if not texts:
-            return [], np.empty(0)
-        X = doc_matrix([t or "" for t in texts])  # (N, D), fully vectorized
-        scores = X @ self.centroids.T  # (N, L)
+        margin = best − second-best cosine (confidence proxy).
+
+        Docs are featurized and scored ``_DOC_CHUNK`` at a time. The cosine
+        is an ``einsum``, not a BLAS ``@``: BLAS rounds a row's dot products
+        differently depending on how many rows share the call, while
+        ``einsum`` reduces each row alone, so chunking (and the Arrow batch
+        size) leaves every score bit-identical."""
+        n = len(texts)
+        scores = np.empty((n, len(self.langs)))  # (N, L)
+        for lo in range(0, n, _DOC_CHUNK):
+            X = doc_matrix([t or "" for t in texts[lo : lo + _DOC_CHUNK]])
+            np.einsum("nd,ld->nl", X, self.centroids, out=scores[lo : lo + len(X)])
         order = np.argsort(scores, axis=1)
         best = order[:, -1]
-        margin = scores[np.arange(len(texts)), best] - scores[
-            np.arange(len(texts)), order[:, -2]
-        ]
+        margin = scores[np.arange(n), best] - scores[np.arange(n), order[:, -2]]
         return [self.langs[i] for i in best], margin
 
 

@@ -378,7 +378,6 @@ class QualityFilterPipeline:
                 *input_fingerprint_exprs(["url", "warc_ts", "text"]),
             )
         )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # repartition on (month, salt): skew defusal AND at most one file
         # per (month, salt-bucket) — without month in the key every task
         # could hold rows of every month and fan out #tasks × #months files.
@@ -420,13 +419,15 @@ class QualityFilterPipeline:
         self._stage_start(manifest, "metrics")
         pending = sorted(set(months_written) | set(written_only))
         if pending:
-            per_month = (
+            # at most one row per month: sort here, not with a Spark global
+            # sort (an extra range-partitioning exchange on every run)
+            per_month = sorted(
                 self._read_output()
                 .filter(F.col("month").isin(pending))
                 .groupBy("month")
                 .agg(*_metric_exprs())
-                .orderBy("month")
-                .collect()
+                .collect(),
+                key=lambda r: r["month"],
             )
         else:
             per_month = []

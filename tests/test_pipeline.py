@@ -76,6 +76,10 @@ def test_run_write_and_resume(pages, tmp_path):
     manifest = json.load(open(os.path.join(out, "manifest.json")))
     assert manifest["state"] == "completed"
     assert set(manifest["completed_batches"]) == {b["month"] for b in res1.batches}
+    # batches and manifest both list the months in order
+    months = [b["month"] for b in res1.batches]
+    assert len(months) == 4 and months == sorted(months)
+    assert list(manifest["completed_batches"]) == months
     # metrics recorded per batch
     m0 = res1.batches[0]["metrics"]
     assert m0["rows"] > 0 and "kept" in m0 and "null_text" in m0

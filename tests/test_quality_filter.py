@@ -3,8 +3,12 @@ labeler + byte-identical scrubbed text per document (BASELINE.json metric)."""
 
 from __future__ import annotations
 
+import random
+
+import numpy as np
 import pytest
 
+from data_profiler_spark.functions import corpus, textmodel
 from data_profiler_spark.pipeline import score_pages
 from data_profiler_spark.synth import gen_doc
 
@@ -96,6 +100,44 @@ def test_langid_accuracy_on_ground_truth(scored_vs_ref):
 def test_determinism_same_doc():
     a, b = gen_doc(123), gen_doc(123)
     assert a == b
+
+
+def _langid_texts(n: int) -> list:
+    """n mixed-language docs: single-language, two-language, too short for a
+    trigram, empty and null."""
+    rng = random.Random(n)
+    out = []
+    for i in range(n):
+        lang = corpus.LANGS[i % len(corpus.LANGS)]
+        kind = i % 7
+        if kind == 5:
+            out.append(None if i % 2 else "")
+        elif kind == 6:
+            out.append("ab")
+        else:
+            text = corpus.make_sentence(rng, lang, rng.randint(1, 40))
+            if kind == 4:
+                text += " " + corpus.make_sentence(rng, rng.choice(corpus.LANGS), 10)
+            out.append(text)
+    return out
+
+
+@pytest.mark.parametrize("n", [0, 1, 255, 256, 257, 3 * 256 + 7])
+def test_langid_chunked_scoring_matches_one_matrix(n):
+    """predict_batch scores _DOC_CHUNK docs at a time; labels and margins must
+    be bit-identical to scoring the whole batch as one matrix."""
+    model = textmodel.langid_model()
+    texts = _langid_texts(n)
+    X = textmodel.doc_matrix([t or "" for t in texts])
+    # the row-independent product predict_batch uses (see its docstring)
+    scores = np.einsum("nd,ld->nl", X, model.centroids)
+    order = np.argsort(scores, axis=1)
+    best = order[:, -1]
+    margin = scores[np.arange(n), best] - scores[np.arange(n), order[:, -2]]
+
+    labels, margins = model.predict_batch(texts)
+    assert labels == [model.langs[i] for i in best]
+    assert np.array_equal(margins, margin)
 
 
 def test_dup_2gram_rule_fires(spark):
