@@ -2,8 +2,9 @@
 
 Default: headline queries + the quality-filter scoring pipeline at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``. Every query gets a warm pass (codegen +
-page-cache + python-worker spin-up excluded) then best-of-2 timed passes
+``local[$SPARK_GRAFT_CPUS]`` (default: the host's core count). Every
+query gets a warm pass (codegen + page-cache + python-worker spin-up
+excluded) then best-of-2 timed passes
 (round 5 — the host stalls in multi-second bursts that fabricated the
 round-4 per-query "regressions"; min-of-N is the repo's standard
 estimator under multiplicative noise), and a pure-JVM ``host_marker_sec``
@@ -35,8 +36,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from data_profiler_spark.session import default_parallelism  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_parallelism()
 # synthetic pages volume for the scoring benchmark, ∝ scale factor
 PAGES_N = int(os.environ.get("SPARK_GRAFT_PAGES_N", "40000"))
 # scaling rounds use a larger volume: per-task work must dominate fixed

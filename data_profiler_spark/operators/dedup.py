@@ -790,52 +790,30 @@ def simhash_pairs(
 # Near-dup components (pair graph → clusters → keep list)
 # --------------------------------------------------------------------------
 
-def near_dup_components(
-    pairs: DataFrame, max_iter: int = 50, method: str = "star"
-) -> DataFrame:
+def near_dup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """Connected components over a near-dup pair graph: (doc_id, group_id)
     for every id that appears in >= 1 pair, with ``group_id`` = the min id
     of its component — the step between pair generation
     (:func:`minhash_lsh_pairs` etc.) and "keep one representative per
     cluster" that an at-scale dedup pipeline actually executes.
 
-    Two interchangeable engines (identical output — value-equality tested
-    on hand/random/real graphs):
+    Engine: alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14): each round
+    re-points every vertex's strictly-larger neighbors (large-star) then
+    its smaller-or-equal neighbors (small-star) at the neighborhood
+    minimum — two groupBy-min + join rounds over the EDGE set, provably
+    O(log n) rounds on ANY graph (a 1000-edge chain closes in <= 12,
+    tested).
 
-    ``method='star'`` (DEFAULT) — alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14): each round re-points every vertex's
-    strictly-larger neighbors (large-star) then its smaller-or-equal
-    neighbors (small-star) at the neighborhood minimum — two groupBy-min
-    + join rounds over the EDGE set, provably O(log n) rounds on ANY
-    graph. Measured faster-or-equal on EVERY tested shape at the same
-    round count (8 cores): 30k-chain 16.8 s vs jump 25.7 s, 20k star
-    family 1.7 vs 2.2 s, dense cliques tie, 100k-edge adversarial mix
-    (chain+expander+family) 22.8 vs 50.7 s — the per-round work (two
-    groupBys) beats jump's join+groupBy+shortcut everywhere measured,
-    which is why it's the default despite jump's vertex-sized state.
-
-    ``method='jump'`` — min-label propagation WITH pointer jumping: each
-    iteration (a) pushes the smallest known label across edges (join +
-    groupBy-min) and then (b) shortcuts through the label graph —
-    ``label ← label[label]`` — doubling propagation distance per round,
-    so convergence is O(log diameter): a 1000-edge chain closes in ~10
-    rounds (tested). Its working state is the VERTEX-sized label table
-    (star's is edge-sized until contraction shrinks it), which can matter
-    when edges ≫ vertices and executor storage is the binding constraint.
-
-    Both: one driver ``count()``/checksum per round detects convergence
-    (inherent to any fixed-point loop); each round's state is materialized
-    (reliable ``checkpoint`` when a checkpoint dir is configured, else
-    ``localCheckpoint`` — see ``operators.checkpoints``) so the plan
-    doesn't grow with iterations. Skewed
-    keys (a giant component concentrates its root's key) are absorbed by
-    AQE skew-join splitting (on in session.py).
+    One driver count/checksum per round detects convergence (inherent to
+    any fixed-point loop); ``max_iter`` bounds the rounds. Each round's
+    state is materialized (reliable ``checkpoint`` when a checkpoint dir
+    is configured, else ``localCheckpoint`` — see
+    ``operators.checkpoints``) so the plan doesn't grow with iterations.
+    Skewed keys (a giant component concentrates its root's key) are
+    absorbed by AQE skew-join splitting (on in session.py).
     """
-    if method == "star":
-        labels, _ = _star_components_with_rounds(pairs, max_iter)
-        return labels
-    labels, _ = _components_with_rounds(pairs, max_iter)
+    labels, _ = _star_components_with_rounds(pairs, max_iter)
     return labels
 
 
@@ -843,7 +821,7 @@ def _star_components_with_rounds(
     pairs: DataFrame, max_iter: int = 50
 ) -> tuple[DataFrame, int]:
     """(components, rounds-to-converge) for the large-star/small-star
-    engine — see :func:`near_dup_components`.
+    engine behind :func:`near_dup_components`.
 
     Edge invariant: the working set holds directed edges (u, v) with
     u > v (child → smaller parent). large-star(n): every neighbor x > n
@@ -915,54 +893,6 @@ def _star_components_with_rounds(
         verts.join(parents, "doc_id", "left").select(
             "doc_id", F.coalesce(F.col("_p"), F.col("doc_id")).alias("group_id")
         ),
-        rounds,
-    )
-
-
-def _components_with_rounds(pairs: DataFrame, max_iter: int = 50) -> tuple[DataFrame, int]:
-    """(components, rounds-to-converge) — see :func:`near_dup_components`."""
-    edges = pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
-    edges = materialize(
-        edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b"))),
-        eager=True,
-    )
-    labels = materialize(
-        edges.select(F.col("a").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("label")),
-        eager=True,
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neigh = (
-            edges.join(labels.withColumnRenamed("v", "a"), "a")
-            .groupBy("b")
-            .agg(F.min("label").alias("nl"))
-            .withColumnRenamed("b", "v")
-        )
-        cand = labels.join(neigh, "v", "left").select(
-            "v",
-            F.least(F.col("label"), F.coalesce(F.col("nl"), F.col("label"))).alias("cl"),
-            F.col("label"),
-        )
-        # pointer jumping: cl ← min(cl, label[cl]) — label values are
-        # vertex ids, so one self-join resolves the current label OF the
-        # candidate label, halving the remaining chain every round
-        lk = labels.select(F.col("v").alias("cl"), F.col("label").alias("cll"))
-        updated = cand.join(lk, "cl", "left").select(
-            "v",
-            F.least(F.col("cl"), F.coalesce(F.col("cll"), F.col("cl"))).alias("new_label"),
-            F.col("label"),
-        )
-        changed = updated.filter(F.col("new_label") < F.col("label")).count()
-        labels = materialize(
-            updated.select("v", F.col("new_label").alias("label")), eager=True
-        )
-        if changed == 0:
-            break
-    return (
-        labels.select(F.col("v").alias("doc_id"), F.col("label").alias("group_id")),
         rounds,
     )
 

@@ -100,9 +100,11 @@ def score_pages(df: DataFrame, keep_langs: tuple[str, ...] = rules.KEEP_LANGS) -
 def _metric_exprs() -> list:
     """Profiler-style exact metric expressions — row counts, keep counts,
     null rates, score histogram (north rule 'per-partition lineage +
-    profiler-style exact metrics'). Used twice: as an ``observe()`` on the
-    write pass (run totals, zero extra scans) and as a ``groupBy(month)``
-    agg over the written output (per-month manifest entries)."""
+    profiler-style exact metrics'). Used once: as a ``groupBy(month)`` agg
+    over the written output, one manifest entry per month. Run totals are
+    sums of the per-month entries (``RunResult.total_rows``); the write
+    pass's ``observe()`` carries only the months written and the input
+    fingerprint."""
     ppl = F.col("log_ppl")
     bins = [
         F.sum(

@@ -12,6 +12,7 @@ import sys
 from pathlib import Path
 
 import duckdb
+from pyspark.sql.types import DecimalType
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -41,12 +42,31 @@ def canon(rows: list[dict]) -> list[tuple]:
     return sorted(tuple(norm(r[c]) for c in cols) for r in rows)
 
 
+def boundary_type_errors(spark_schema, columns, types) -> list[str]:
+    """One error per oracle-boundary column typed DECIMAL in Spark, or
+    HUGEINT / UHUGEINT / DECIMAL in the DuckDB relation (``rel.columns``,
+    ``rel.types``). The driver's hasher serializes these types differently
+    per engine (round-4 ``band_df_report``, round-5 ``pack_sequences``), so
+    such a column must be cast at the boundary, in both queries."""
+    errs = [
+        f"spark column {f.name} is {f.dataType.simpleString()}"
+        for f in spark_schema.fields
+        if isinstance(f.dataType, DecimalType)
+    ]
+    errs += [
+        f"duckdb column {c} is {t}"
+        for c, t in zip(columns, types)
+        if t.id in ("hugeint", "uhugeint", "decimal")
+    ]
+    return errs
+
+
 def main() -> int:
     import __spark_entry__ as entry_mod
     from data_profiler_spark.session import get_spark
 
     only = set(sys.argv[1:])
-    spark = get_spark(app_name="oracle_check", cores=8)
+    spark = get_spark(app_name="oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
@@ -76,6 +96,10 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error: {e}")
             failures += 1
             continue
+        lint = boundary_type_errors(sdf.schema, rel.columns, rel.types)
+        for err in lint:
+            print(f"FAIL {name}: {err}")
+        failures += len(lint)
         ok = True
         if [c.lower() for c in scols] != ocols:
             print(f"FAIL {name}: schema spark={scols} duckdb={ocols}")
@@ -89,10 +113,10 @@ def main() -> int:
                 diff = [(a, b) for a, b in zip(cs, co) if a != b][:3]
                 print(f"FAIL {name}: value mismatch; first diffs: {diff}")
                 ok = False
-        if ok:
-            print(f"OK   {name} ({len(srows)} rows)")
-        else:
+        if not ok:
             failures += 1
+        elif not lint:
+            print(f"OK   {name} ({len(srows)} rows)")
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     return 1 if failures else 0
 

@@ -208,74 +208,68 @@ def test_simhash_band_key_space_scales_with_bits(docs):
     assert n_distinct <= SIMHASH_PAIR_BANDS * (1 << width)
 
 
-def test_near_dup_components_and_keep_list(spark, docs):
-    """Min-label propagation must find exact connected components (chain +
+def _union_find_components(edges) -> dict:
+    """Pure-Python reference: vertex -> min id of its connected component."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _components(pairs) -> dict:
+    return {r["doc_id"]: r["group_id"] for r in dedup.near_dup_components(pairs).collect()}
+
+
+def _edges(pairs) -> list:
+    return [(r["id1"], r["id2"]) for r in pairs.select("id1", "id2").collect()]
+
+
+def test_near_dup_components_and_keep_list(spark):
+    """large-star/small-star must find exact connected components (chain +
     separate pair + untouched singletons), and the keep list drops exactly
     the non-representative members."""
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id1 long, id2 long")
-    comp = {r["doc_id"]: r["group_id"] for r in dedup.near_dup_components(pairs).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+    assert _components(pairs) == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
     ids = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
     kept = {r["doc_id"] for r in dedup.dedup_keep_ids(ids, dedup.near_dup_components(pairs)).collect()}
     assert kept == {1, 4, 5, 7}  # singletons 4 and 7 untouched
-    # on the fixture: every pair member gets a group; group_id is a member
-    fpairs = dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_shingle_df=None)
-    fcomp = dedup.near_dup_components(fpairs)
-    members = {r["id1"] for r in fpairs.collect()} | {r["id2"] for r in fpairs.collect()}
-    got = {r["doc_id"]: r["group_id"] for r in fcomp.collect()}
-    assert set(got) == members
-    assert all(g in members and g <= d for d, g in got.items())
-
-
-def test_components_chain_converges_in_log_rounds(spark):
-    """Judge r2 #7: pointer jumping must close a 1000-edge chain (the
-    adversarial worst case for plain min-label propagation, which needs
-    diameter=1000 rounds) in ~log2(n) rounds."""
-    from data_profiler_spark.operators.dedup import _components_with_rounds
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1000)], "id1 long, id2 long"
-    )
-    comp, rounds = _components_with_rounds(chain, max_iter=50)
-    got = {r["doc_id"]: r["group_id"] for r in comp.collect()}
-    assert len(got) == 1001 and set(got.values()) == {0}
-    assert rounds <= 12, f"chain took {rounds} rounds (want O(log n) ≈ 10)"
 
 
 def test_star_components_match_jump_engine(spark, docs):
-    """large-star/small-star (method='star') must produce byte-identical
-    components to pointer jumping on: the hand-built graph, a random
-    Erdős–Rényi-ish graph (the adversarial shape star is FOR), and the
-    real fixture's near-dup pairs."""
+    """The star engine must match a reference on the hand graph, a random
+    graph (the adversarial shape star is for) and the fixture's near-dup
+    pairs. The reference was once the pointer-jumping engine; it is now a
+    pure-Python union-find, the only other engine being gone."""
     import random
 
-    hand = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id1 long, id2 long")
+    hand = [(1, 2), (2, 3), (5, 6)]
+    assert _components(spark.createDataFrame(hand, "id1 long, id2 long")) == _union_find_components(hand)
     rng = random.Random(13)
     rnd_edges = list(
         {
             (min(a, b), max(a, b))
-            for a, b in (
-                (rng.randrange(300), rng.randrange(300)) for _ in range(400)
-            )
+            for a, b in ((rng.randrange(300), rng.randrange(300)) for _ in range(400))
             if a != b
         }
     )
     rnd = spark.createDataFrame(rnd_edges, "id1 long, id2 long")
-    real = dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_shingle_df=None)
-    for pairs in (hand, rnd, real):
-        jump = {r["doc_id"]: r["group_id"] for r in dedup.near_dup_components(pairs).collect()}
-        star = {
-            r["doc_id"]: r["group_id"]
-            for r in dedup.near_dup_components(pairs, method="star").collect()
-        }
-        assert star == jump
+    assert _components(rnd) == _union_find_components(rnd_edges)
+    fpairs = dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_shingle_df=None)
+    fedges = _edges(fpairs)
+    assert fedges  # the fixture has near-dup pairs, so the comparison bites
+    assert _components(fpairs) == _union_find_components(fedges)
 
 
 def test_star_components_chain_rounds(spark):
     """Judge r3 #6: the star engine must close the 1000-edge chain in
-    O(log n) alternation rounds (provably O(log n) on ANY graph — the
-    property pointer jumping only has for label-distance, not frontier
-    growth)."""
+    O(log n) alternation rounds (provably O(log n) on ANY graph)."""
     from data_profiler_spark.operators.dedup import _star_components_with_rounds
 
     chain = spark.createDataFrame(
